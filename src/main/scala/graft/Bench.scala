@@ -207,16 +207,24 @@ object Bench {
     // solo-phase reservation (r14 verdict item 1; see soloReserve).
     // Env override for dev sittings; 0 disables.
     val soloReserveSec = sys.env.get("SPARK_GRAFT_BENCH_SOLO_RESERVE_SEC")
-      .flatMap(v => scala.util.Try(v.trim.toDouble).toOption)
+      .flatMap { v =>
+        val parsed = scala.util.Try(v.trim.toDouble).toOption
+          .filter(d => d >= 0 && !d.isInfinite)
+        if (parsed.isEmpty) System.err.println(
+          "[graft] ignoring malformed SPARK_GRAFT_BENCH_SOLO_RESERVE_SEC " +
+            s"value '$v' — using the computed solo reserve")
+        parsed
+      }
       .getOrElse(Bench.soloReserve(names.map(est), budget))
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var degraded = 0
     // Incremental artifact (round-13 lesson: the sf10 sitting that
     // deadlocked inside q293 erased 2 h of completed measurements
     // because the artifact was only written at loop end). Every
-    // query APPENDS its row here the moment it completes, fsync'd
-    // per line, so a hung or killed sitting still leaves every
-    // finished number on disk.
+    // query APPENDS its row here the moment it completes, so a hung
+    // or killed sitting still leaves every finished number on disk.
+    // The append is not fsync'd: the row is in the OS page cache once
+    // the write returns, which survives the process, not a power loss.
     val progressPath = java.nio.file.Paths.get("bench_progress.jsonl")
     try java.nio.file.Files.deleteIfExists(progressPath)
     catch { case _: Throwable => }

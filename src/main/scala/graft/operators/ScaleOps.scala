@@ -33,6 +33,19 @@ object ScaleOps {
     else df.localCheckpoint()
   }
 
+  /** Free the blocks of a frame that [[stage]] (or any
+    * `localCheckpoint`) produced. `Dataset.unpersist` only drops
+    * CacheManager entries, where a checkpoint is never registered, so
+    * on a checkpointed frame it frees nothing: the blocks belong to the
+    * RDD under the frame's `LogicalRDD` leaf. Any other frame is left
+    * alone. The frame must not be read afterwards.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
+
   /** Scale-adaptive block width for a reused, checkpointed edge table
     * (the iterative-graph loops: q134/q178/q190 and
     * [[connectedComponents]]'s iterative path) — the
@@ -295,10 +308,10 @@ object ScaleOps {
     var labels = stage(bothByDst.select(col("src").as("id")).distinct()
       .withColumn("lab", col("id")))
     // `both` is dead once the spread copy and the label init are
-    // materialized (r14 advice: holding TWO staged copies of the edge
-    // table for the whole run doubles edge storage at exactly the
-    // scale this path targets)
-    if (!(bothByDst eq both)) both.unpersist(false)
+    // materialized: holding two staged copies of the edge table for
+    // the whole run doubles edge storage at exactly the scale this
+    // path targets
+    if (!(bothByDst eq both)) release(both)
     def labelSum(): Long =
       labels.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)
     var lastSum = labelSum()

@@ -433,7 +433,7 @@ object StreamingQueries {
     // in a different order is DIFFERENT staged data (arrival order is
     // what multi-batch gates test) — it must not hit a cached dir
     val planNorm = (input.queryExecution.analyzed.toString +
-      orderCols.map(_.toString).mkString(" "))
+      orderCols.map(_.toString).mkString("\u0000"))
       .replaceAll("#\\d+", "#")
     val fp = java.security.MessageDigest.getInstance("MD5")
       .digest(planNorm.getBytes("UTF-8"))

@@ -602,6 +602,15 @@ class PartitionedCowTable(val root: String, val partCol: String,
     else readConformed(cur, dirs)
   }
 
+  /** Test seam: invoked at the commit-race window (after a mutation
+    * derived its state from the current version, before it publishes)
+    * so specs can interleave a competing writer DETERMINISTICALLY —
+    * real double-thread races are flaky by construction. No-op in
+    * production; a test sets it and the body self-clears (the
+    * interleaved mutation re-enters the same window).
+    */
+  private[sources] var raceSeam: () => Unit = () => ()
+
   /** DELETION-VECTOR delete: commit the matching rows' KEYS as a tiny
     * sidecar file instead of rewriting any data dir — the Delta
     * deletion-vector / Iceberg delete-file shape, the only delete
@@ -627,53 +636,48 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * ceil(keys / shardRows) part files instead of a forced single
     * file — a billion-key erasure must not funnel through one task.
     */
-  /** Test seam: invoked at the commit-race window (after a mutation
-    * derived its state from the current version, before it publishes)
-    * so specs can interleave a competing writer DETERMINISTICALLY —
-    * real double-thread races are flaky by construction. No-op in
-    * production; a test sets it and the body self-clears (the
-    * interleaved mutation re-enters the same window).
-    */
-  private[sources] var raceSeam: () => Unit = () => ()
-
   def deleteWhereDV(pred: Column, keys: Seq[String],
                     shardRows: Long = 8L * 1024 * 1024): Unit = {
     val cur = requireVersion
     val spec = partColAt(cur)
     val selCols = (keys :+ spec).distinct
-    val hit = read().filter(pred).select(selCols.map(col): _*)
-      .localCheckpoint() // reused: key projection + touched values
-    val matches = hit.select(keys.map(col): _*).distinct()
-    val nKeys = matches.count()
-    if (nKeys == 0) return
-    val touched = hit.select(col(spec).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val rel = f"dv/dv_${cur + 1}%06d_" +
-      s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-    val shards = math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
-    (if (shards == 1) matches.coalesce(1) else matches.repartition(shards))
-      .write.parquet(s"$root/$rel")
-    val entries = entriesAt(cur)
-    val dv0 = dvsAt(cur)
-    val dvNew = entries.map { e =>
-      val attach = e.pcol != spec || touched.contains(e.value)
-      val prev = dv0.getOrElse(e.dir, Seq.empty)
-      e.dir -> (if (attach) prev :+ rel else prev)
-    }.toMap
-    raceSeam()
-    try {
-      writeVersion(cur + 1, schemaAt(cur).toDDL, spec, entries,
-        defaultsAt(cur), statsAt(cur), dvNew, strStatsAt(cur),
-        dblStatsAt(cur), kindsAt(cur), bytesAt(cur), bloomsAt(cur))
-    } catch {
-      case e: java.util.ConcurrentModificationException =>
-        // the just-written vector file is ours and no manifest
-        // references it — reclaim it in the same failure path, the
-        // commit() symmetry (an orphan would otherwise linger until
-        // vacuum)
-        try CowTable.walkDelete(Paths.get(root, rel))
-        catch { case c: Exception => e.addSuppressed(c) }
-        throw e
+    // one pass over the matches feeds the key file and the touched values
+    evaluatedOnce(read().filter(pred).select(selCols.map(col): _*)) { hit =>
+      val matches = hit.select(keys.map(col): _*).distinct()
+      val nKeys = matches.count()
+      if (nKeys > 0) {
+        val touched = hit.select(col(spec).cast("string")).distinct()
+          .collect().map(_.getString(0)).toSet
+        val rel = f"dv/dv_${cur + 1}%06d_" +
+          s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
+        val shards =
+          math.max(1, math.ceil(nKeys.toDouble / shardRows).toInt)
+        (if (shards == 1) matches.coalesce(1)
+         else matches.repartition(shards))
+          .write.parquet(s"$root/$rel")
+        val entries = entriesAt(cur)
+        val dv0 = dvsAt(cur)
+        val dvNew = entries.map { e =>
+          val attach = e.pcol != spec || touched.contains(e.value)
+          val prev = dv0.getOrElse(e.dir, Seq.empty)
+          e.dir -> (if (attach) prev :+ rel else prev)
+        }.toMap
+        raceSeam()
+        try {
+          writeVersion(cur + 1, schemaAt(cur).toDDL, spec, entries,
+            defaultsAt(cur), statsAt(cur), dvNew, strStatsAt(cur),
+            dblStatsAt(cur), kindsAt(cur), bytesAt(cur), bloomsAt(cur))
+        } catch {
+          case e: java.util.ConcurrentModificationException =>
+            // the just-written vector file is ours and no manifest
+            // references it — reclaim it in the same failure path, the
+            // commit() symmetry (an orphan would otherwise linger until
+            // vacuum)
+            try CowTable.walkDelete(Paths.get(root, rel))
+            catch { case c: Exception => e.addSuppressed(c) }
+            throw e
+        }
+      }
     }
   }
 
@@ -726,12 +730,16 @@ class PartitionedCowTable(val root: String, val partCol: String,
   }
 
   /** The distinct partition values present in a DataFrame — small by
-    * construction (a commit touches few partitions), so the collect is
-    * bounded by partition count, not data size.
+    * construction (a commit touches few partitions). Each task
+    * deduplicates its own values, so the collect is bounded by tasks ×
+    * partition values, not data size, and it is one job: a
+    * `distinct()` would add an exchange, which adaptive execution runs
+    * as a job of its own, on every commit.
     */
   private def touchedValues(df: DataFrame): Set[String] = {
-    val vals = df.select(col(currentPartCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet
+    val vals = df.select(col(currentPartCol).cast("string")).rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator)
+      .collect().toSet
     // Path-unsafe values ROUND-TRIP: partitionBy percent-escapes them
     // into the dir name and commit's listing unescapes them back into
     // Entry.value (escapePathName/unescapePathName are exact
@@ -752,6 +760,25 @@ class PartitionedCowTable(val root: String, val partCol: String,
           s"sentinel — not supported")
     }
     vals
+  }
+
+  /** Run `f` over ONE evaluation of `df`: an eager local checkpoint
+    * (materialized inside its own action, so a `Dataset.observe` on
+    * `df` still reports its rows) that every later pass reads —
+    * touched values, the key side of the anti-join, the legacy
+    * semi-join, a duplicate check and the stage write's union — freed
+    * when `f` returns or throws, so after the commit publishes or
+    * aborts. A caller's frame is often itself a full read of this
+    * table (an ingest anti-join, a step's join of its results onto
+    * the scenes), and one that yields different rows on a second
+    * evaluation (a nondeterministic expression, a source rewritten in
+    * between) must not touch one partition set and stage another: the
+    * staged value would replace a partition the commit never read,
+    * losing its rows.
+    */
+  private def evaluatedOnce[T](df: DataFrame)(f: DataFrame => T): T = {
+    val copy = df.localCheckpoint()
+    try f(copy) finally graft.operators.ScaleOps.release(copy)
   }
 
   /** Test seam: fires after the commit's data is staged, before the
@@ -807,10 +834,36 @@ class PartitionedCowTable(val root: String, val partCol: String,
         !eb.get((e.pcol, e.value)).contains(e.dir)))
   }
 
+  // dev-only phase timing (GRAFT_COW_TIMING=1): the mutation paths are
+  // the scale hot path; this is how the r14 O(touched-dirs) work was
+  // measured
+  private val timing = sys.env.get("GRAFT_COW_TIMING").contains("1")
+  private def tphase[T](tag: String)(f: => T): T =
+    if (!timing) f else {
+      val t0 = System.nanoTime()
+      val r = f
+      println(f"[cowcommit] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+      r
+    }
+
   /** Core commit: write `data` as the new content of exactly the
-    * partitions in `touched` (a touched partition absent from `data`
-    * is dropped — it became empty); carry every untouched partition
-    * from `carried`.
+    * partitions in `touchedIn` (a touched partition absent from
+    * `data` is dropped — it became empty); carry every untouched
+    * partition from `carried`.
+    *
+    * ONE EVALUATION: `data` is evaluated once, by the stage write.
+    * The mutators that take a caller's frame (append, upsert,
+    * mergeApply, replacePartitions) pass one copy of it
+    * ([[evaluatedOnce]]): their touched values, key sides and the
+    * union staged here all read that copy, which lives until this
+    * commit publishes or aborts. `touchedIn = None` is the whole-table
+    * rewrite (overwrite, zOrderRelayout; nothing carried): the
+    * touched values are the partitions the stage listing holds, so
+    * overwrite copies nothing — its input can be the whole table.
+    * The listing is checked either way: a default-partition dir
+    * (null, empty or sentinel value) or a staged value outside
+    * the touched set rejects the commit, deletes the stage and
+    * writes no version.
     *
     * `narrowRead` declares the commit's READ SCOPE: true means the
     * caller read only the partitions it rewrites or drops (append,
@@ -835,19 +888,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * still never rebase: any concurrent change could invalidate what
     * they computed.
     */
-  // dev-only phase timing (GRAFT_COW_TIMING=1): the mutation paths are
-  // the scale hot path; this is how the r14 O(touched-dirs) work was
-  // measured
-  private val timing = sys.env.get("GRAFT_COW_TIMING").contains("1")
-  private def tphase[T](tag: String)(f: => T): T =
-    if (!timing) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[cowcommit] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    }
-
-  private def commit(data0: DataFrame, touched: Set[String],
+  private def commit(data0: DataFrame, touchedIn: Option[Set[String]],
                      carried: Seq[Entry],
                      resetSchema: Boolean = false,
                      narrowRead: Boolean = false,
@@ -865,6 +906,63 @@ class PartitionedCowTable(val root: String, val partCol: String,
         (data0, data0.schema.toDDL, Map.empty[String, (String, Int)])
       else (conformInput(data0), schemaAt(requireVersion).toDDL,
         defaultsAt(requireVersion))
+    // stage under a writer-unique name, then claim w_<next> with a
+    // no-replace rename (see CowTable.commit): two writers racing from
+    // the same base both target w_<next>, and the loser's overwrite
+    // could delete the winner's committed files mid-write — the
+    // dir-name collision fails the loser before shared state is touched
+    val stage = s"_stage_${java.util.UUID.randomUUID()}"
+    // Stage-write layout (a measured finding, kept so it is not
+    // re-tried blind): hash-clustering this write by (__part,
+    // content-salt) — Iceberg's distribution-mode=hash — measured
+    // SLOWER at gate scale (q226 5.7 → 9.6 s steady): the extra
+    // exchange and per-task writer setup cost more than the serial
+    // dynamic write saved. A plain repartition on __part (one file
+    // per partition dir) measured 16% lower run_s on the perfbench
+    // catalog workload (4-core VM, input already evaluated once), but
+    // it is the same commit-side shaping and needs its own measured
+    // change. File-count layout remains [[compact]]'s job
+    // (targetBytes sizing), where the rewrite IS the point.
+    tphase("stage write")(data
+      .withColumn("__part", col(spec).cast("string"))
+      .write.partitionBy("__part").mode("overwrite").parquet(s"$root/$stage"))
+    // (raw value, dir name) of every partition the stage holds: the
+    // listing unescapes each dir name back to the RAW value, because
+    // partitionBy percent-escapes path-unsafe chars (':' → '%3A') and
+    // `touched` membership, GraftFileIndex exact pruning,
+    // deleteWhereDV's scoped attach and the zone-map lookup all
+    // compare raw values. Entry.dir keeps the on-disk (escaped) name.
+    val staged: Seq[(String, String)] = tphase("list staged") {
+      val listing = Files.list(Paths.get(root, stage))
+      try listing.iterator().asScala
+        .map(_.getFileName.toString)
+        .filter(_.startsWith("__part="))
+        .map(n => (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(n.stripPrefix("__part=")), n)).toSeq
+      finally listing.close()
+    }
+    val touched = touchedIn.getOrElse(staged.map(_._1).toSet)
+    // null and the empty string both land in the default-partition dir
+    // (as would the sentinel string itself), which cannot round-trip;
+    // a value outside `touched` would replace a partition this commit
+    // never read (an input that changed between evaluations, or a
+    // rewrite of the partition column)
+    val rejected =
+      if (staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"))
+        Some(s"partition column '$spec' contains null, an empty string " +
+          s"or the default-partition sentinel — Spark writes all three " +
+          s"as the same dir, which cannot round-trip; not supported")
+      else {
+        val stray = staged.map(_._1).filterNot(touched)
+        if (stray.isEmpty) None
+        else Some(s"staged partition values ${stray.sorted.mkString(", ")} " +
+          s"are outside the commit's touched set — a key's partition " +
+          s"value must not change")
+      }
+    rejected.foreach { msg =>
+      CowTable.walkDelete(Paths.get(root, stage))
+      throw new IllegalArgumentException(msg)
+    }
     // this commit's affected scope: the partitions it rewrites plus
     // every entry the caller deliberately dropped (migrated legacy
     // dirs) — a rebase is sound only when the winner touched none
@@ -873,26 +971,6 @@ class PartitionedCowTable(val root: String, val partCol: String,
         (base0.map(entriesAt).getOrElse(Seq.empty)
           .map(e => (e.pcol, e.value)).toSet --
           carried.map(e => (e.pcol, e.value)).toSet)
-    // stage under a writer-unique name, then claim w_<next> with a
-    // no-replace rename (see CowTable.commit): two writers racing from
-    // the same base both target w_<next>, and the loser's overwrite
-    // could delete the winner's committed files mid-write — the
-    // dir-name collision fails the loser before shared state is touched
-    val stage = s"_stage_${java.util.UUID.randomUUID()}"
-    // (Optimization-round probe, kept as a finding: hash-clustering
-    // this write by (__part, content-salt) — Iceberg's distribution-
-    // mode=hash — was measured SLOWER at gate scale (q226 5.7 → 9.6 s
-    // steady): the stage-write phase is dominated by the commit's
-    // input-side compute (the touched partitions' post-image
-    // read/union/filter), not by file fan-out, and the extra exchange
-    // + per-task writer setup cost more than the serial dynamic write
-    // saved. File-count layout remains [[compact]]'s job (targetBytes
-    // sizing), where the rewrite IS the point. The probe's preShaped
-    // opt-out parameter was dead code and is gone — re-derive it from
-    // this note if commit-side shaping ever returns.)
-    tphase("stage write")(data
-      .withColumn("__part", col(spec).cast("string"))
-      .write.partitionBy("__part").mode("overwrite").parquet(s"$root/$stage"))
     commitSeam()
     var base = base0
     var curCarried = carried
@@ -943,25 +1021,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     // claim/publish loop below re-claims under the new base.
     def publishAttempt(wdir: String): Boolean = {
       val next = base.map(_ + 1).getOrElse(0)
-      val written: Seq[Entry] = tphase("list written") {
-        val listing = Files.list(Paths.get(root, wdir))
-        // Entry.value is ALWAYS the RAW partition value: partitionBy
-        // percent-escapes path-unsafe chars into the dir name (':' →
-        // '%3A'), so the listed name must be UNESCAPED back before it
-        // is compared to anything literal-side — `touched` membership,
-        // GraftFileIndex exact pruning, deleteWhereDV's scoped attach
-        // and the zone-map stats lookup all compare raw values (a
-        // value kept escaped would silently miss every one of them).
-        // Entry.dir keeps the on-disk (escaped) name.
-        try listing.iterator().asScala
-          .map(_.getFileName.toString)
-          .filter(_.startsWith("__part="))
-          .map(n => Entry(spec,
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(n.stripPrefix("__part=")),
-            s"$wdir/$n")).toSeq
-        finally listing.close()
-      }
+      val written: Seq[Entry] =
+        staged.map { case (v, n) => Entry(spec, v, s"$wdir/$n") }
       // carried minus current-spec entries being replaced (an evolved
       // table's legacy entries are dropped only when explicitly absent
       // from `carried` — the migration paths pass them pre-filtered;
@@ -1532,9 +1593,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
 
   /** Create or fully replace the table (every partition rewritten,
     * legacy dirs dropped — a full rewrite is also a full migration).
+    * No copy of `df` is taken (it can be the whole table): the stage
+    * write is its one evaluation, and the touched partitions come
+    * from the stage listing.
     */
   override def overwrite(df: DataFrame): Unit =
-    commit(df, touchedValues(df), Seq.empty, resetSchema = true)
+    commit(df, None, Seq.empty, resetSchema = true)
 
   /** Append rows: only the partitions the batch lands in are
     * rewritten (existing rows of those partitions union the batch).
@@ -1543,10 +1607,9 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   override def append(df0: DataFrame): Unit =
     if (!exists) overwrite(df0)
-    else {
-      val df = conformInput(df0)
+    else evaluatedOnce(conformInput(df0)) { df =>
       val touched = touchedValues(df)
-      commit(readSpec(touched).unionByName(df), touched,
+      commit(readSpec(touched).unionByName(df), Some(touched),
         currentEntriesOrEmpty, narrowRead = true)
     }
 
@@ -1564,10 +1627,11 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * keyed full-outer diff with row hashing, two driver collects —
     * re-derives information the caller started with, at a cost that
     * grows with TABLE size instead of delta size. No diff, no read
-    * of superseded data at all: one pass over `rows` for the touched
-    * values plus the stage write. Refuses tables with legacy-spec
-    * dirs (replacement scope is defined in current-spec values;
-    * legacy rows would silently survive alongside the replacement).
+    * of superseded data at all: `rows` is evaluated once, and its
+    * copy feeds the touched values and the stage write. Refuses
+    * tables with legacy-spec dirs (replacement scope is defined in
+    * current-spec values; legacy rows would silently survive
+    * alongside the replacement).
     */
   def replacePartitions(values: Set[String], rows: DataFrame): Unit =
     if (!exists) overwrite(rows)
@@ -1576,11 +1640,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
         s"replacePartitions: $root has legacy-spec dirs — wholesale " +
           "replacement is defined over current-spec values only; " +
           "compact() first or use mergeSync")
-      val data = conformInput(rows)
       // narrowRead: like append, the commit's affected scope IS the
       // touched partitions, so an entry-disjoint winner can rebase
-      commit(data, values ++ touchedValues(data), currentEntriesOrEmpty,
-        narrowRead = true)
+      evaluatedOnce(conformInput(rows)) { data =>
+        commit(data, Some(values ++ touchedValues(data)),
+          currentEntriesOrEmpty, narrowRead = true)
+      }
     }
 
   /** PK upsert (J7): incoming rows replace same-key rows; untouched
@@ -1588,6 +1653,12 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * evolved table, legacy dirs holding touched keys are migrated
     * whole to the current spec in the same commit (their unrelated
     * rows ride along — progressive migration, never key duplication).
+    *
+    * `updates0` is evaluated once ([[evaluatedOnce]]): the touched
+    * values, the legacy key semi-join, the key side of the anti-join
+    * and the union all read one copy of it, freed after the commit
+    * publishes or aborts. A caller that derives its updates from a
+    * read of this table pays that read once per commit.
     *
     * Concurrency: losing a version race to an entry-disjoint winner
     * REBASES when the winner's new content provably carries none of
@@ -1598,17 +1669,17 @@ class PartitionedCowTable(val root: String, val partCol: String,
     */
   override def upsert(updates0: DataFrame, keys: Seq[String]): Unit =
     if (!exists) overwrite(updates0)
-    else {
-      val updates = conformInput(updates0)
+    else evaluatedOnce(conformInput(updates0)) { updates =>
+      val updKeys = updates.select(keys.map(col): _*)
       val touched0 = touchedValues(updates)
-      val (mig, migRows) = legacyTouching(
-        _.join(updates.select(keys.map(col): _*), keys, "left_semi"))
+      val (mig, migRows) =
+        legacyTouching(_.join(updKeys, keys, "left_semi"))
       val touched = touched0 ++ touchedValues(migRows)
       commit(
         readSpec(touched).unionByName(migRows)
-          .join(updates.select(keys.map(col): _*), keys, "left_anti")
+          .join(updKeys, keys, "left_anti")
           .unionByName(updates),
-        touched, currentEntriesOrEmpty.filterNot(mig.contains),
+        Some(touched), currentEntriesOrEmpty.filterNot(mig.contains),
         keyProbe = Some(keyDisjointProbe(keys)))
     }
 
@@ -1660,7 +1731,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
         case (df, (name, value)) =>
           df.withColumn(name, when(pred, value).otherwise(col(name)))
       }
-      commit(updated, touched, currentEntriesOrEmpty.filterNot(mig.contains))
+      commit(updated, Some(touched),
+        currentEntriesOrEmpty.filterNot(mig.contains))
     }
   }
 
@@ -1674,7 +1746,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       touchedValues(migRows)
     if (touched.nonEmpty)
       commit(readSpec(touched).unionByName(migRows).filter(!pred),
-        touched, currentEntriesOrEmpty.filterNot(mig.contains))
+        Some(touched), currentEntriesOrEmpty.filterNot(mig.contains))
   }
 
   /** Single-commit CDC apply — MERGE INTO semantics over an ops log:
@@ -1690,9 +1762,11 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * for one key has no defined order and fails loudly (the probe is
     * a limit-1 existence job, not a full count); callers consolidate
     * to final-state-per-key first (the q126 latest-per-key device).
+    * `ops0` is evaluated once: the duplicate check, touched values,
+    * key sides and staged rows all read one copy of it.
     */
-  def mergeApply(ops: DataFrame, keys: Seq[String],
-                 opCol: String = "op"): Unit = {
+  def mergeApply(ops0: DataFrame, keys: Seq[String],
+                 opCol: String = "op"): Unit = evaluatedOnce(ops0) { ops =>
     val dup = ops.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
       .limit(1).count()
@@ -1700,21 +1774,23 @@ class PartitionedCowTable(val root: String, val partCol: String,
       s"mergeApply: multiple ops for one key — consolidate the batch " +
         s"to final state per key before applying")
     val data = conformInput(ops.filter(col(opCol) =!= "D").drop(opCol))
-    if (!exists) { overwrite(data); return }
-    val touched0 = touchedValues(ops)
-    val touchedKeys = ops.select(keys.map(col): _*)
-    val (mig, migRows) = legacyTouching(
-      _.join(touchedKeys, keys, "left_semi"))
-    val touched = touched0 ++ touchedValues(migRows)
-    commit(
-      readSpec(touched).unionByName(migRows)
-        .join(touchedKeys, keys, "left_anti")
-        .unionByName(data),
-      touched, currentEntriesOrEmpty.filterNot(mig.contains),
-      // same key-scoped result as upsert (I/U/D all key-addressed):
-      // rebase past an entry-disjoint winner whose new content holds
-      // none of this batch's keys
-      keyProbe = Some(keyDisjointProbe(keys)))
+    if (!exists) overwrite(data)
+    else {
+      val touched0 = touchedValues(ops)
+      val touchedKeys = ops.select(keys.map(col): _*)
+      val (mig, migRows) = legacyTouching(
+        _.join(touchedKeys, keys, "left_semi"))
+      val touched = touched0 ++ touchedValues(migRows)
+      commit(
+        readSpec(touched).unionByName(migRows)
+          .join(touchedKeys, keys, "left_anti")
+          .unionByName(data),
+        Some(touched), currentEntriesOrEmpty.filterNot(mig.contains),
+        // same key-scoped result as upsert (I/U/D all key-addressed):
+        // rebase past an entry-disjoint winner whose new content holds
+        // none of this batch's keys
+        keyProbe = Some(keyDisjointProbe(keys)))
+    }
   }
 
   /** Declarative reconcile — make the table's content EQUAL `source`
@@ -1775,41 +1851,44 @@ class PartitionedCowTable(val root: String, val partCol: String,
           .isInCollection(vs.toSeq)), readWhere(vs.contains))
       case None => (source, read())
     }
-    val diff = hashed(srcSide, "s")
+    val diff0 = hashed(srcSide, "s")
       .join(hashed(tgtSide, "t"), keys, "full_outer")
       .withColumn("__st",
         when(col("__h_t").isNull, "I")
           .when(col("__h_s").isNull, "D")
           .when(col("__h_s") =!= col("__h_t"), "U"))
       .filter(col("__st").isNotNull)
-      .localCheckpoint() // changed keys only; reused 4×
-    val counts = diff.groupBy("__st").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (diff.isEmpty) return (0L, 0L, 0L)
-    val touched0 = diff
-      .select(coalesce(col("__v_s"), col("__v_t")).as("v"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val changedKeys = diff.select(keys.map(col): _*)
-    val (mig, migRows) = legacyTouching(
-      _.join(changedKeys, keys, "left_semi"))
-    val touched = touched0 ++ touchedValues(migRows)
-    // keys that stay behind in NON-migrated legacy dirs are unchanged
-    // by construction (their dirs held no changed key) — exclude them
-    // from the rewritten partitions so they aren't duplicated
-    val specR = currentPartCol
-    val remain = currentEntriesOrEmpty
-      .filter(e => e.pcol != specR && !mig.contains(e))
-    val remainKeys =
-      if (remain.isEmpty) emptyLike().select(keys.map(col): _*)
-      else readConformed(requireVersion,
-        remain.map(e => s"$root/${e.dir}")).select(keys.map(col): _*)
-    commit(
-      source.filter(col(currentPartCol).cast("string")
-          .isInCollection(touched.toSeq))
-        .join(remainKeys, keys, "left_anti"),
-      touched, currentEntriesOrEmpty.filterNot(mig.contains))
-    (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
-      counts.getOrElse("D", 0L))
+    evaluatedOnce(diff0) { diff => // changed keys only; reused 3×
+      val counts = diff.groupBy("__st").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (counts.nonEmpty) {
+        val touched0 = diff
+          .select(coalesce(col("__v_s"), col("__v_t")).as("v"))
+          .distinct().collect().map(_.getString(0)).toSet
+        val changedKeys = diff.select(keys.map(col): _*)
+        val (mig, migRows) = legacyTouching(
+          _.join(changedKeys, keys, "left_semi"))
+        val touched = touched0 ++ touchedValues(migRows)
+        // keys that stay behind in NON-migrated legacy dirs are
+        // unchanged by construction (their dirs held no changed key) —
+        // exclude them from the rewritten partitions so they aren't
+        // duplicated
+        val specR = currentPartCol
+        val remain = currentEntriesOrEmpty
+          .filter(e => e.pcol != specR && !mig.contains(e))
+        val remainKeys =
+          if (remain.isEmpty) emptyLike().select(keys.map(col): _*)
+          else readConformed(requireVersion,
+            remain.map(e => s"$root/${e.dir}")).select(keys.map(col): _*)
+        commit(
+          source.filter(col(currentPartCol).cast("string")
+              .isInCollection(touched.toSeq))
+            .join(remainKeys, keys, "left_anti"),
+          Some(touched), currentEntriesOrEmpty.filterNot(mig.contains))
+      }
+      (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
+        counts.getOrElse("D", 0L))
+    }
   }
 
   /** Compact the selected partitions: rewrite each as a single task's
@@ -1876,7 +1955,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
           .repartition(width, col(currentPartCol), col("__salt"))
           .drop("__pv", "__nf", "__salt")
       }
-    commit(shaped, touched,
+    commit(shaped, Some(touched),
       currentEntriesOrEmpty.filterNot(legacy.contains),
       narrowRead = true)
   }
@@ -1931,9 +2010,9 @@ class PartitionedCowTable(val root: String, val partCol: String,
     evolvePartitioning(cellCol)
     // the one data job: every row rewritten under its cell; carried
     // is empty because every pre-relayout entry (now legacy under the
-    // old spec) is superseded by this commit
-    val rows = read().withColumn(cellCol, cell)
-    commit(rows, touchedValues(rows), Seq.empty)
+    // old spec) is superseded by this commit, whose touched cells are
+    // the ones the stage listing holds
+    commit(read().withColumn(cellCol, cell), None, Seq.empty)
   }
 
   /** Drop every `w_*` dir and `v_*.json` no longer reachable from the

@@ -105,6 +105,32 @@ class ScaleOpsSpec extends SparkSpec {
       localEdgeThreshold = 0).count() == 0)
   }
 
+  test("connectedComponents frees the pre-spread edge copy once the " +
+    "spread copy exists") {
+    // chains of five ids: 160 undirected edges, diameter 4
+    val edges = (1L to 200L).filter(_ % 5 != 0).map(i => (i, i + 1))
+      .toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val unspread = ScaleOps.connectedComponents(edges,
+      localEdgeThreshold = 0).as[(Long, Long)].collect().toMap
+    // a tiny per-partition byte budget forces the spread (width 4): a
+    // second staged edge copy, after which the first must be freed.
+    // Persisted RDDs are held weakly, so one the cleaner already took
+    // is simply absent; an edge copy is one holding both directions
+    // of every edge (320 rows)
+    val before = sc.getPersistentRDDs.keySet
+    spark.conf.set("spark.graft.graph.bytesPerEdgePartition", "1")
+    val spread =
+      try ScaleOps.connectedComponents(edges, localEdgeThreshold = 0)
+        .as[(Long, Long)].collect().toMap
+      finally spark.conf.unset("spark.graft.graph.bytesPerEdgePartition")
+    assert(spread == unspread)
+    val edgeCopies = sc.getPersistentRDDs.toSeq
+      .filter { case (id, rdd) => !before.contains(id) && rdd.count() == 320L }
+    assert(edgeCopies.size <= 1,
+      s"${edgeCopies.size} staged edge copies still persisted")
+  }
+
   test("stage() honors the disk-only flag without changing results") {
     val df = spark.range(0, 1000).toDF("id")
     // default path: plain localCheckpoint, results intact

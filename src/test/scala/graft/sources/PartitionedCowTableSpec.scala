@@ -420,18 +420,22 @@ class PartitionedCowTableSpec extends SparkSpec {
     "versions land in order") {
     implicit val s = spark
     val t = mk()
-    // writer B completes a full commit (manifest + pointer flip) WHILE
-    // writer A's parquet write executes — after A snapshots its base
-    // version, before A's pointer flip. B's manifest is v0's content
+    // writer B completes a full commit (manifest + pointer flip) right
+    // after writer A's stage write (the commit seam) — after A
+    // snapshots its base version, before A's pointer flip. B's
+    // manifest is v0's content
     // re-published: its delta vs A's base is EMPTY, so A's key-scoped
     // rebase is sound by construction (nothing A read changed) and A
     // must land as v2 rather than aborting (pre-r13 behavior).
-    PcowRacer.root = t.root
-    PcowRacer.calls.set(0)
-    val race = udf(PcowRacer.fire)
+    t.commitSeam = () => {
+      t.commitSeam = () => ()
+      val r = java.nio.file.Paths.get(t.root)
+      Files.copy(r.resolve("v_000000.json"), r.resolve("v_000001.json"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.write(r.resolve("_current"), "1".getBytes("UTF-8"))
+    }
     t.upsert(Seq((2L, "2020-03", "B-CLOBBER", true))
-      .toDF("pid", "month", "v", "flag")
-      .withColumn("pid", race($"pid")), Seq("pid"))
+      .toDF("pid", "month", "v", "flag"), Seq("pid"))
     assert(t.version == 2) // B's no-op v1, A rebased as v2
     assert(t.read().count() == 4)
     val vs = t.read().select("pid", "v").as[(Long, String)].collect().toMap
@@ -1416,29 +1420,140 @@ class PartitionedCowTableSpec extends SparkSpec {
       .select("z_cell").distinct().count() > 1)
     assert(t.read().count() === 34)
   }
+
+  /** One new row, pid 9, whose month is 2020-05 on its first
+    * evaluation and 2020-04 on every later one.
+    */
+  private def flippingRow() = {
+    EvalProbe.calls.set(0)
+    val flip = udf(EvalProbe.flipMonth).asNondeterministic()
+    spark.range(9, 10).select($"id".as("pid"), flip($"id").as("month"),
+      lit("e").as("v"), lit(false).as("flag"))
+  }
+
+  test("append of a row whose partition value changes on re-evaluation " +
+    "loses no acknowledged row: the input is evaluated once") {
+    val t = mk() // pid 1,2 → 2020-03; pid 3 → 2020-04; pid 4 → 2020-05
+    t.append(flippingRow())
+    // evaluating twice touched 2020-05 but staged 2020-04, and the
+    // staged 2020-04 replaced the old one: pid 3 vanished
+    assert(t.read().select("pid").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 9L))
+    assert(t.read().filter($"pid" === 9L).select("month").as[String]
+      .head() == "2020-05")
+  }
+
+  test("upsert of a row whose partition value changes on re-evaluation " +
+    "loses no acknowledged row: the input is evaluated once") {
+    val t = mk()
+    t.upsert(flippingRow(), Seq("pid"))
+    assert(t.read().select("pid").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 9L))
+    assert(t.read().filter($"pid" === 9L).select("month").as[String]
+      .head() == "2020-05")
+  }
+
+  test("every mutator evaluates its input frame exactly once") {
+    implicit val s = spark
+    val tally = udf(EvalProbe.tally).asNondeterministic()
+    // month reads the tallied pid, so a pass that needs only the
+    // partition column (touched values) still counts
+    def rows(from: Long, until: Long, month: String) =
+      spark.range(from, until).select(tally($"id").as("pid"))
+        .select($"pid", when($"pid" > 0L, lit(month)).as("month"),
+          lit("n").as("v"), lit(true).as("flag"))
+    def evaluations(f: => Unit): Int = {
+      EvalProbe.calls.set(0); f; EvalProbe.calls.get()
+    }
+    val fresh = PartitionedCowTable(
+      Files.createTempDirectory("pcow_once").toString + "/t", "month")
+    assert(evaluations(fresh.overwrite(rows(1, 4, "2020-01"))) == 3)
+    assert(fresh.read().count() == 3)
+    val t = mk()
+    assert(evaluations(t.append(rows(9, 12, "2020-06"))) == 3)
+    assert(t.read().count() == 7)
+    assert(evaluations(t.upsert(rows(1, 3, "2020-03"), Seq("pid"))) == 2)
+    assert(t.read().filter($"v" === "n").count() == 5)
+    assert(evaluations(
+      t.replacePartitions(Set("2020-04"), rows(20, 23, "2020-04"))) == 3)
+    assert(t.read().filter($"month" === "2020-04").select("pid")
+      .as[Long].collect().sorted.toSeq == Seq(20L, 21L, 22L))
+    assert(evaluations(t.mergeApply(
+      rows(1, 3, "2020-03").withColumn("op", lit("D")), Seq("pid"))) == 2)
+    assert(t.read().filter($"month" === "2020-03").isEmpty)
+  }
+
+  test("commit copies are freed: no persisted RDD outlives a commit, " +
+    "whether it succeeds or is rejected") {
+    val sc = spark.sparkContext
+    def leftBehind(f: => Any): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      f
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    def rows(pid: Long, month: String) =
+      Seq((pid, month, "n", true)).toDF("pid", "month", "v", "flag")
+    val t = mk()
+    assert(leftBehind(t.append(rows(9L, "2020-06"))).isEmpty)
+    assert(leftBehind(t.upsert(rows(1L, "2020-03"), Seq("pid"))).isEmpty)
+    assert(leftBehind(t.mergeApply(rows(2L, "2020-03")
+      .withColumn("op", lit("U")), Seq("pid"))).isEmpty)
+    assert(leftBehind(
+      t.replacePartitions(Set("2020-06"), rows(10L, "2020-06"))).isEmpty)
+    assert(leftBehind(t.mergeSync(
+      t.read().filter($"pid" =!= 3L), Seq("pid"))).isEmpty)
+    assert(leftBehind(t.deleteWhereDV($"pid" === 4L, Seq("pid"))).isEmpty)
+    val v = t.version
+    // a null partition value is rejected loudly, and its copy is
+    // freed on the way out
+    val nullMonth = rows(11L, null)
+    assert(leftBehind(intercept[IllegalArgumentException](
+      t.append(nullMonth))).isEmpty)
+    assert(leftBehind(intercept[IllegalArgumentException](
+      t.upsert(nullMonth, Seq("pid")))).isEmpty)
+    assert(t.version == v)
+  }
+
+  test("a commit whose staged partitions leave its touched set is " +
+    "rejected: updateWhere moving a row to another month loses nothing") {
+    val t = mk() // pid 1,2 → 2020-03; pid 3 → 2020-04; pid 4 → 2020-05
+    val v = t.version
+    // touches 2020-03 only, but stages pid 1 under 2020-04: publishing
+    // that dir would replace 2020-04 and drop pid 3
+    intercept[IllegalArgumentException] {
+      t.updateWhere($"pid" === 1L, Map("month" -> lit("2020-04")))
+    }
+    assert(t.version == v)
+    assert(t.read().select("pid").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L))
+    import scala.jdk.CollectionConverters._
+    assert(!Files.list(java.nio.file.Paths.get(t.root)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("_stage_")))
+  }
+
+  test("overwrite takes its partitions from the stage listing: a " +
+    "default-partition dir is rejected, the stage deleted, no version " +
+    "written") {
+    val t = mk()
+    val v = t.version
+    intercept[IllegalArgumentException] {
+      t.overwrite(Seq((1L, "", "a", false)).toDF("pid", "month", "v", "flag"))
+    }
+    assert(t.version == v && t.read().count() == 4)
+    import scala.jdk.CollectionConverters._
+    assert(!Files.list(java.nio.file.Paths.get(t.root)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("_stage_")))
+  }
 }
 
-/** Simulates a competing writer's COMPLETED commit firing from inside
-  * another writer's in-flight parquet job (the CowTableSpec
-  * RacingWriter device, adapted to the manifest layout): version 1 =
-  * version 0's manifest re-published, pointer flipped to 1.
+/** Counters behind the nondeterministic UDFs the single-evaluation
+  * specs feed into commits (local mode: tasks run in the test JVM).
   */
-object PcowRacer extends Serializable {
-  @volatile var root: String = _
+object EvalProbe extends Serializable {
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-  // upsert() runs TWO actions over the updates frame: the
-  // touchedValues collect (before commit() snapshots its base
-  // version), then the staged parquet write (after). Firing on the
-  // second evaluation lands the competing commit exactly in the
-  // stale-base window the optimistic check must catch.
-  val fire: Long => Long = { x =>
-    if (calls.incrementAndGet() >= 2) {
-      val r = java.nio.file.Paths.get(root)
-      java.nio.file.Files.copy(r.resolve("v_000000.json"),
-        r.resolve("v_000001.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.write(r.resolve("_current"), "1".getBytes("UTF-8"))
-    }
-    x
-  }
+  /** Counts every evaluation, passes the value through. */
+  val tally: Long => Long = { x => calls.incrementAndGet(); x }
+  /** 2020-05 on the first call, 2020-04 on every later one. */
+  val flipMonth: Long => String = { _ =>
+    if (calls.incrementAndGet() == 1) "2020-05" else "2020-04" }
 }
