@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** What to publish for one query given its suite (median, min) and
     * steady-state reference → (published median, published min,
@@ -127,7 +126,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Wall budget for the WHOLE run (suite + solo), in seconds. The
     // round-9 driver bench timed out (rc=124) running a flat 5 reps
     // over 253 queries plus an uncapped solo ledger; a budget that
@@ -155,17 +153,7 @@ object Bench {
     val onlySel: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // a serialization failure must FAIL THE TASK, not hang the
-      // stage: SerializationDebugger crashes on JDK17 module access
-      // (ExceptionInInitializerError) and killed the r13 sf10 sitting
-      .config("spark.serializer.extraDebugInfo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Neutral warmup: first job in a fresh session pays ~4s of codegen/
     // reader initialization that would otherwise be attributed to
     // whichever query happens to run first.

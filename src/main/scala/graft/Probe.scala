@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: run one query N times and print a scheduling profile —
   * wall seconds per rep, Spark job count, stage count, task count, sum
@@ -47,15 +46,7 @@ object Probe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer.extraDebugInfo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val prof = new Prof
     spark.sparkContext.addSparkListener(prof)
     // warmup, as in Bench

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.SparkEntry
 
 /** Dev utility: run two named SparkEntry queries and diff their results
@@ -14,14 +13,7 @@ object CompareQueries {
   def main(args: Array[String]): Unit = {
     val (nameA, nameB) = (args(0), args(1))
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val a = SparkEntry.queries(nameA)(spark, sfDir)
     val b = SparkEntry.queries(nameB)(spark, sfDir)
     val shared = a.columns.intersect(b.columns).toSeq

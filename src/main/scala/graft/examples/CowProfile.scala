@@ -1,7 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.LocalSession
 
 /** Dev tool: phase-timed replay of the q130 CoW sequence — where does
   * a commit's time go as the dir count grows (r13 verdict item 3).
@@ -10,14 +12,7 @@ import org.apache.spark.sql.functions._
 object CowProfile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer.extraDebugInfo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     def phase[T](tag: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.SparkEntry
 
 /** WORKED EXAMPLE: the LLM-training-data curation pipeline end-to-end,
@@ -35,14 +36,7 @@ object CurationPipelineDemo {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.envCores(8))
 
     def q(name: String): DataFrame = SparkEntry.queries(name)(spark, dir)
     def one(df: DataFrame): org.apache.spark.sql.Row = df.collect()(0)

@@ -2,9 +2,10 @@ package graft.examples
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.sources.CowTable
 import graft.streaming.IncrementalIngest
 
@@ -47,13 +48,7 @@ object PagedIngestDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4)
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("paged").toString

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.SparkEntry
 
 /** Dev utility: run one named SparkEntry query with repeated timings
@@ -14,18 +13,7 @@ object RunQuery {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val reps = if (args.length > 2) args(2).toInt else 3
     val doExplain = args.contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // a serialization failure must FAIL THE TASK, not hang the
-      // stage: SerializationDebugger crashes on JDK17 module access
-      // (ExceptionInInitializerError) and killed the r13 sf10 sitting
-      .config("spark.serializer.extraDebugInfo", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val fn = SparkEntry.queries(name)
     if (doExplain) fn(spark, sfDir).explain("formatted")
     for (i <- 1 to reps) {

@@ -2,9 +2,9 @@ package graft.examples
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.catalog.SceneCatalog
 import graft.model.Scene
 import graft.sources.CowTable
@@ -17,11 +17,7 @@ import graft.streaming.IncrementalIngest
   */
 object SceneCatalogDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("scene-catalog-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4, Map("spark.app.name" -> "scene-catalog-demo"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

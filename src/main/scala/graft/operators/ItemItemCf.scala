@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Item-item collaborative filtering (Sarwar et al. 2001) with an
-  * AUTOMATIC regime switch — the round-13 closure of the CF family's
-  * work-selection loop: the reference's work-selection queries
+  * AUTOMATIC regime switch: the reference's work-selection queries
   * (`eodatadownrun.py:790-845`) never needed a human to pick a plan,
   * and neither should this operator. Three arms, one contract:
   *
@@ -17,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    deterministically sampled) — bounds the MAP-side enumeration at
   *    ≤ cap²/2 pairs per user no matter how degenerate the basket
   *    distribution gets; exact under its own cap contract.
-  *  - '''capped∘DIMSUM''' (q227; Zadeh & Goel 2013): the cap composed
+  *  - '''capped∘DIMSUM''' (q227, [[dimsum]]): the cap composed
   *    with probability-proportional pair sampling — additionally
   *    bounds the EXCHANGE when popular items would still flood it
   *    after capping.
@@ -92,7 +91,7 @@ object ItemItemCf {
     * array algebra, NOT a self-join: the only exchange left is the
     * (p1,p2) count itself, the exact-CF lower bound.
     *
-    * (r15 optimization probe, kept as a finding: moving BOTH
+    * (Measured and rejected: moving BOTH
     * aggregate passes above an explicit (p1,p2) repartition — the
     * "pre-bucketed pairs" idea, motivated by the map-side partial
     * aggregate's measured combine factor ≈ 1 — was implemented and
@@ -119,15 +118,14 @@ object ItemItemCf {
   /** Cosine + symmetrize + top-k with the 6dp-then-tiebreak rank.
     *
     * Symmetrization is an EXPLODE of both orientations from one pass
-    * over `sim`, not a self-union (r15, guide §1.2): the union form
-    * planned the whole pair subtree TWICE — AQE reused the pair
-    * EXCHANGE across the branches, but each branch still re-ran the
-    * post-exchange aggregation and the cosine joins (r14 probe: 144 MB
-    * shuffle written, 254 MB read — every exchange read twice). The
-    * r14 staging probe (localCheckpoint before the union) fixed the
-    * double-pass but paid 8–13 s of GC materializing 12M-row blocks
-    * and was reverted; explode(array(fwd, rev)) removes the duplicate
-    * subtree STATICALLY — same two rows per similarity, one plan, no
+    * over `sim`, not a self-union: the union form planned the whole
+    * pair subtree TWICE — AQE reused the pair EXCHANGE across the
+    * branches, but each branch still re-ran the post-exchange
+    * aggregation and the cosine joins (measured: 144 MB shuffle
+    * written, 254 MB read). Staging `sim` before the union fixed the
+    * double pass but paid 8–13 s of GC materializing 12M-row blocks;
+    * explode(array(fwd, rev)) removes the duplicate subtree
+    * STATICALLY — same two rows per similarity, one plan, no
     * materialization. Spark 4's partial WindowGroupLimit still bounds
     * the window input map-side, now over the exploded stream.
     */
@@ -167,22 +165,21 @@ object ItemItemCf {
       pos.groupBy("p").agg(count(lit(1)).as("n"))), k)
 
   /** q211's arm: exact cosines over md5-capped baskets. */
-  def capped(pos: DataFrame, cap: Int = 8, k: Int = 3): DataFrame = {
-    val c = capBaskets(pos, cap).localCheckpoint()
-    rankTopK(cosineJoin(pairCounts(c),
-      c.groupBy("p").agg(count(lit(1)).as("n"))), k)
-  }
+  def capped(pos: DataFrame, cap: Int = 8, k: Int = 3): DataFrame =
+    exactOn(capBaskets(pos, cap).localCheckpoint(), k)
 
-  /** q227's arm: md5-capped baskets + DIMSUM-sampled pair emissions
-    * (dyadic Bernoulli draw on md5("ds:u:p1:p2"), keep-probability
-    * min(1, γ/√(n1·n2)) at M=2^20 resolution) — estimator divides
-    * the kept count back by pq/M, so cosine is unbiased under the
-    * composed contract.
+  /** DIMSUM-sampled cosines (Zadeh & Goel 2013): each within-basket
+    * pair is kept by a dyadic Bernoulli draw on md5("ds:u:p1:p2")
+    * with keep-probability min(1, γ/√(n1·n2)) at M=2^20 resolution,
+    * and the estimator divides the kept count back by pq/M, so the
+    * cosine is unbiased. `cap = None` samples the full baskets (q214);
+    * `Some(c)` first applies the md5 basket cap (q227, the
+    * capped∘DIMSUM arm of [[auto]]).
     */
-  def cappedDimsum(pos: DataFrame, cap: Int = 8, gamma: Double = 8.0,
-                   k: Int = 3): DataFrame = {
+  def dimsum(pos: DataFrame, gamma: Double = 8.0,
+             cap: Option[Int] = None, k: Int = 3): DataFrame = {
     val M = 1L << 20
-    val c = capBaskets(pos, cap).localCheckpoint()
+    val c = cap.fold(pos)(capBaskets(pos, _)).localCheckpoint()
     val nu = c.groupBy("p").agg(count(lit(1)).as("n"))
     val sampled = c.join(nu, "p")
       .groupBy("u")
@@ -197,6 +194,11 @@ object ItemItemCf {
         col("pr.p2").as("p2"), col("pr.n2").as("n2"))
       .withColumn("pq", round(least(lit(1.0),
         lit(gamma) / sqrt(col("n1") * col("n2"))) * M).cast("long"))
+      // pq == 2^20 ⇔ p = 1 ⇔ the 40-bit draw always passes — the
+      // leading disjunct short-circuits codegen past the md5 for
+      // every exact-regime pair (the common case off the whale tail;
+      // measured ~12 → ~7 s on q214 at sf0.1), with IDENTICAL
+      // semantics, so the oracle replays the unconditional form
       .filter(col("pq") >= M ||
         conv(substring(md5(concat_ws(":", lit("ds"), col("u"),
           col("p1"), col("p2"))), 1, 10), 16, 10).cast("long") <
@@ -229,15 +231,13 @@ object ItemItemCf {
     // materialize the positives ONCE: the preflight is its own action,
     // so without this the caller's input plan (for q290 a join+distinct
     // over the fact tables) is evaluated twice — once for the decision
-    // pass and again inside the routed arm (guide §1.2: don't compute
-    // things twice; the id-pair frame is exactly what exact() already
-    // checkpoints)
+    // pass and again inside the routed arm
     val posM = pos.localCheckpoint()
     val pf = preflight(posM, cap, exactBudget, cappedBudget)
     val arm = pf.regime match {
       case "exact" => exactOn(posM, k)
       case "capped" => capped(posM, cap, k)
-      case _ => cappedDimsum(posM, cap, gamma, k)
+      case _ => dimsum(posM, gamma, Some(cap), k)
     }
     arm.select(F.lit(pf.regime).as("regime"),
       F.lit(pf.pairRowsExact).as("pair_rows_exact"),

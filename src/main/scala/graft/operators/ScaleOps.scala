@@ -11,22 +11,20 @@ import org.apache.spark.sql.functions._
 object ScaleOps {
 
   /** Lineage-cutting materialization point for big iterative/reused
-    * state (q184's positives, q190's undirected edge table, the CC
-    * label rounds). Default = plain `localCheckpoint()` (Spark's
+    * state (q184's positives, the graph edge tables, every
+    * [[iterate]] round). Default = plain `localCheckpoint()` (Spark's
     * MEMORY_AND_DISK block store — right when state fits executor
-    * memory). With `spark.graft.stage.diskOnly=true` (or env
-    * `SPARK_GRAFT_DISK_STAGE=1`) the blocks go to DISK_ONLY instead:
-    * on a single JVM whose MemoryStore a multi-GB checkpoint would
-    * thrash ("Not enough space to cache" → eviction storms, the
-    * round-8 sf10 probes on q184/q190), paying the sequential disk
-    * read per round is far cheaper than evicting every other block.
-    * On a real cluster the flag stays off — aggregate executor memory
-    * is the point of having executors.
+    * memory). With `spark.graft.stage.diskOnly=true` the blocks go to
+    * DISK_ONLY instead: on a single JVM whose MemoryStore a multi-GB
+    * checkpoint would thrash ("Not enough space to cache" → eviction
+    * storms, measured at sf10 on q184/q190), paying the sequential
+    * disk read per round is far cheaper than evicting every other
+    * block. On a real cluster the flag stays off — aggregate executor
+    * memory is the point of having executors.
     */
   def stage(df: DataFrame): DataFrame = {
     val disk = df.sparkSession.conf
       .getOption("spark.graft.stage.diskOnly")
-      .orElse(sys.env.get("SPARK_GRAFT_DISK_STAGE"))
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     if (disk)
       df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -46,25 +44,13 @@ object ScaleOps {
     case _ => ()
   }
 
-  /** Scale-adaptive block width for a reused, checkpointed edge table
-    * (the iterative-graph loops: q134/q178/q190 and
-    * [[connectedComponents]]'s iterative path) — the
-    * statePartitionsFor pattern applied to graph rounds (r14 verdict
-    * item 5). The r14 device pinned the FULL session width (32) on
-    * every edge checkpoint to defeat AQE's coalesce-to-1; that
-    * restored round parallelism but the driver-to-driver comparison
-    * showed the full-width repartition+sort pass costing more than
-    * three near-serial rounds saved at sf0.1 (q134 3.63→4.27 s,
-    * q190 6.62→7.77 s). Width must track EDGE VOLUME, not core
-    * count: ceil(estBytes / spark.graft.graph.bytesPerEdgePartition)
-    * (default 8 MB, conf + env `SPARK_GRAFT_GRAPH_EDGE_PARTITION_BYTES`
-    * overridable), clamped to [1, session shuffle partitions] — a
-    * cluster sitting with thousands of shuffle partitions and a
-    * TB-scale edge table scales up automatically, a gate-scale graph
-    * gets 2-4 blocks instead of 32 single-digit-MB tasks, and width 1
-    * means "keep the coalesced shape, skip the spread pass entirely".
-    * `estBytes` only needs the right ORDER (callers pass the source
-    * table's on-disk bytes, or staged row count x row width); ceil +
+  /** Block width for a reused, staged edge table ([[spreadEdges]]):
+    * ceil(estBytes / spark.graft.graph.bytesPerEdgePartition) (default
+    * 8 MB), clamped to [1, session shuffle partitions]. Width must
+    * track EDGE VOLUME, not core count: pinning the full session width
+    * (32) on every edge table cost more in the repartition+sort pass
+    * than the near-serial rounds it saved at sf0.1 (q134 3.63→4.27 s,
+    * q190 6.62→7.77 s). `estBytes` only needs the right ORDER; ceil +
     * clamp absorb small-factor error.
     *
     * MINIMUM-SPREAD gate (same-sitting A/B at sf0.1, cool box): a
@@ -81,20 +67,82 @@ object ScaleOps {
   def edgeWidth(s: org.apache.spark.sql.SparkSession,
                 estBytes: Long): Int = {
     val per = s.conf.getOption("spark.graft.graph.bytesPerEdgePartition")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_EDGE_PARTITION_BYTES"))
       .flatMap { v =>
         val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
         if (parsed.isEmpty) System.err.println(
-          "[graft] ignoring malformed " +
-            "spark.graft.graph.bytesPerEdgePartition / " +
-            s"SPARK_GRAFT_GRAPH_EDGE_PARTITION_BYTES value '$v' — " +
-            "using the 8 MiB default")
+          "[graft] ignoring malformed spark.graft.graph.bytesPerEdgePartition " +
+            s"value '$v' — using the 8 MiB default")
         parsed
       }.getOrElse(8L << 20)
     val cur = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val w = math.max(1, math.min(cur,
       math.ceil(estBytes.toDouble / per).toInt))
     if (w < 4) 1 else w
+  }
+
+  /** Stage the edge table an iterative graph loop re-reads every
+    * round, spread over [[edgeWidth]]`(estBytes)` blocks keyed by
+    * `key`. AQE coalesces a byte-tiny edge exchange to ~1 partition
+    * and the checkpoint freezes that, so every round would read a
+    * near-serial edge side; an explicit repartition is exempt from
+    * coalescing. Under AQE the checkpoint does not keep the
+    * partitioning, so each round's own exchange remains — parallel,
+    * which is the point. Blocks are sorted by `key`: they compress
+    * ~15% smaller through every round's exchange and pre-sort the
+    * merge-join runs. Width 1 keeps the coalesced shape and skips the
+    * spread. An already-staged `edges` is reused as-is at width 1 and
+    * released once its spread copy exists.
+    */
+  def spreadEdges(edges: DataFrame, key: String, estBytes: Long): DataFrame = {
+    val w = edgeWidth(edges.sparkSession, estBytes)
+    if (w <= 1)
+      if (edges.queryExecution.logical
+          .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) edges
+      else stage(edges)
+    else {
+      val spread = stage(edges.repartition(w, col(key)).sortWithinPartitions(key))
+      release(edges)
+      spread
+    }
+  }
+
+  /** The staged-round loop of every iterative operator: round i+1 is
+    * `round(round i)`, [[stage]]d, after which round i is released,
+    * so only the live round holds blocks. `init` belongs to the loop
+    * and is released when round 1 replaces it.
+    *
+    * Without `fixpoint`, exactly `rounds` rounds run. With it, the
+    * loop stops at the first round whose measure equals the previous
+    * round's, and fails loudly when `rounds` rounds have not
+    * converged (a half-converged state is a wrong answer, not a
+    * slower one). The measure is one action per round — the loop adds
+    * no job of its own.
+    */
+  def iterate(init: DataFrame, rounds: Int,
+              fixpoint: Option[DataFrame => Any] = None,
+              name: String = "iterate")
+             (round: DataFrame => DataFrame): DataFrame = {
+    var cur = init
+    var last = fixpoint.map(_(init))
+    var converged = false
+    var i = 0
+    while (!converged && i < rounds) {
+      val next = stage(round(cur))
+      release(cur)
+      cur = next
+      i += 1
+      fixpoint.foreach { m =>
+        val v = m(cur)
+        converged = last.contains(v)
+        last = Some(v)
+      }
+    }
+    if (fixpoint.isDefined && !converged) {
+      release(cur)
+      throw new IllegalStateException(
+        s"$name did not converge in $rounds rounds")
+    }
+    cur
   }
 
   /** Recursive on-disk byte count of a file/dir (0 when absent) — the
@@ -234,8 +282,8 @@ object ScaleOps {
     * star-reduction guard ([[bandedCandidatePairs]]) additionally caps
     * pathological components at diameter ≤ 2 per bucket. Each round is
     * one shuffle-on-`dst` join + one partial-aggregated groupBy;
-    * labels are `localCheckpoint`ed every round so lineage stays flat
-    * at any iteration count. Convergence is detected by the label sum
+    * [[iterate]] stages every round, so lineage stays flat at any
+    * iteration count and only the live round holds blocks. Convergence is detected by the label sum
     * (labels only ever decrease, so an unchanged sum ⇔ a fixpoint) —
     * one cheap aggregate per round instead of a change-count join.
     * Fails loudly if `maxIters` rounds don't converge (a silently
@@ -271,6 +319,7 @@ object ScaleOps {
         both.limit(symRowCap.toInt + 1).count() <= symRowCap) {
       import spark.implicits._
       val pairs = both.as[(Long, Long)].collect()
+      release(both)
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -288,58 +337,32 @@ object ScaleOps {
       val vertices = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
       return vertices.toSeq.sorted.map(v => (v, find(v))).toDF("id", "rep")
     }
-    // Iterative path only: spread the edge table's blocks before the
-    // per-round loop (explicit repartition is exempt from AQE
-    // coalescing, which otherwise collapses the tiny distinct
-    // exchange to ~1 partition and the checkpoint freezes it — every
-    // round then reads a near-serial edge side). Width is SIZE-GATED
-    // ([[edgeWidth]], r14 verdict item 5): `both` is already staged,
-    // so its row count is a ~free action, and 16 bytes approximates
-    // one (long, long) row's shuffle weight. Width 1 keeps the
-    // coalesced blocks as-is — the spread pass at full session width
-    // was a measured net cost on small graphs. The short-circuit
-    // path above never pays any of this.
-    val w = edgeWidth(spark, 16L * both.count())
-    val bothByDst =
-      if (w <= 1) both
-      else stage(both.repartition(w, col("dst"))
-        .sortWithinPartitions("dst")) // sorted blocks compress smaller
-        // through every round's exchange and pre-sort the SMJ runs
-    var labels = stage(bothByDst.select(col("src").as("id")).distinct()
-      .withColumn("lab", col("id")))
-    // `both` is dead once the spread copy and the label init are
-    // materialized: holding two staged copies of the edge table for
-    // the whole run doubles edge storage at exactly the scale this
-    // path targets
-    if (!(bothByDst eq both)) release(both)
-    def labelSum(): Long =
-      labels.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)
-    var lastSum = labelSum()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val nbrMin = bothByDst
-        .join(labels.select(col("id").as("dst"), col("lab").as("nlab")),
-          Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min("nlab").as("nbr_lab"))
-      // (Measured: fusing a pointer-jumping self-join into each round
-      // — O(log diameter) rounds — is SLOWER here: the extra join per
-      // round outweighs the saved rounds on dedup graphs, whose
-      // diameter is already small. Plain one-hop propagation wins.)
-      labels = stage(labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("lab")))
-      val s = labelSum()
-      converged = s == lastSum
-      lastSum = s
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds — " +
-          "component diameter exceeds maxIters; raise it (rounds are " +
-          "O(diameter), so this graph is unusually chainlike)")
+    // `both` is staged, so its row count is a ~free action; 16 bytes
+    // approximates one (long, long) row's shuffle weight
+    val bothByDst = spreadEdges(both, "dst", 16L * both.count())
+    // Measured: fusing a pointer-jumping self-join into each round —
+    // O(log diameter) rounds — is SLOWER here: the extra join per
+    // round outweighs the saved rounds on dedup graphs, whose
+    // diameter is already small. Plain one-hop propagation wins.
+    val labels =
+      try iterate(
+          stage(bothByDst.select(col("src").as("id")).distinct()
+            .withColumn("lab", col("id"))),
+          maxIters,
+          // labels only ever decrease, so an unchanged sum ⇔ a fixpoint
+          fixpoint = Some(_.agg(coalesce(sum("lab"), lit(0L))).head().getLong(0)),
+          name = "connectedComponents (rounds = component diameter; " +
+            "raise maxIters for chainlike graphs)") { labels =>
+        val nbrMin = bothByDst
+          .join(labels.select(col("id").as("dst"), col("lab").as("nlab")),
+            Seq("dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min("nlab").as("nbr_lab"))
+        labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("lab"), coalesce(col("nbr_lab"), col("lab"))).as("lab"))
+      }
+      finally release(bothByDst)
     labels.select(col("id"), col("lab").as("rep"))
   }
 

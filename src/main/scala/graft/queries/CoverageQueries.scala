@@ -30,6 +30,28 @@ object CoverageQueries {
           col("l_partkey").as("p")), Seq("o_orderkey"))
       .select("u", "p").distinct()
 
+  /** The graph family's part co-purchase graph: one row (u, v), u < v,
+    * per distinct pair of parts bought in the same order — a
+    * lineitem self-join on the order key.
+    */
+  private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
+      .distinct()
+    li.as("a").join(li.as("b"), col("a.ok") === col("b.ok") &&
+        col("a.p") < col("b.p"))
+      .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
+  }
+
+  /** Both orientations (u, v) and (v, u) of every edge, exploded from
+    * one pass — not a self-union, which plans the edge subtree twice
+    * (the device of `ItemItemCf.rankTopK`).
+    */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.select(explode(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+
   /** Closed-form fake CMR service for q292: granule i ∈ [0, n) —
     * product by parity, hourly time_start from 2024-01-01Z, geometry
     * by residue (i%14=0 none+small, i%7=0 polygon ring, i%3=0 two
@@ -646,67 +668,40 @@ object CoverageQueries {
     // kmeansFit may collect because its state is k×dim metadata, a
     // rank vector is not). Each of the 3 power iterations is one
     // edge×rank equi-join + one destination-keyed partial-aggregated
-    // groupBy, localCheckpointed so lineage stays flat; N and the
-    // teleport term ride a 1-row broadcast. Symmetric edges mean no
-    // dangling mass. Transcendentals never rank: scores round to 6dp
-    // BEFORE the TakeOrdered top-20 with a part-id tie-break (the
-    // q106 rule; cross-engine float-sum ulps sit at 1e-15 relative,
-    // far below the 6dp gate).
+    // groupBy, staged so lineage stays flat; N and the teleport term
+    // ride a 1-row broadcast. Symmetric edges mean no dangling mass.
+    // Transcendentals never rank: scores round to 6dp BEFORE the
+    // TakeOrdered top-20 with a part-id tie-break (the q106 rule;
+    // cross-engine float-sum ulps sit at 1e-15 relative, far below the
+    // 6dp gate).
     "q134_pagerank" -> { (s, dir) =>
       val d = lit(0.85)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct()
-      // Spread the reused edge table's BLOCK PARALLELISM before the
-      // checkpoint (guide §2.5): AQE coalesces the byte-tiny distinct
-      // exchange to ~1 partition, localCheckpoint freezes that, and
-      // every power iteration then reads a near-serial edge side.
-      // An explicit repartition is exempt from AQE coalescing — but
-      // the r14 full-session-width form (32) was a driver-measured
-      // NET COST at sf0.1 (3.63 → 4.27 s r13→r14: the 32-wide
-      // repartition+sort pass outweighed three near-serial rounds),
-      // so r15 SIZE-GATES the width (ScaleOps.edgeWidth, the
-      // statePartitionsFor pattern): edge bytes are the same order as
-      // the lineitem scan they derive from, so the source's on-disk
-      // bytes pick 2-4 blocks at gate scale and saturate the session
-      // width on cluster-scale inputs. Width 1 skips the spread
-      // entirely (the coalesced shape was the cheaper plan there).
-      // Under AQE the checkpoint does NOT preserve partitioning
-      // metadata, so the per-round exchange itself remains — parallel,
-      // which is the point (PlanQualitySpec pins both properties).
-      val w = SO.edgeWidth(s, SO.pathBytes(s"$dir/lineitem.parquet"))
-      val edges0 = li.join(li.select(col("ok"), col("p").as("q")), "ok")
-        .filter(col("p") =!= col("q"))
-        .select("p", "q").distinct()
-      val edges = (if (w <= 1) edges0
-        else edges0.repartition(w, col("p"))
-          .sortWithinPartitions("p")) // sorted blocks: ~15% smaller
-        // exchanges + pre-sorted SMJ runs every round
-        .localCheckpoint(true)
-      val deg = edges.groupBy("p").agg(count(lit(1)).as("outdeg"))
+      // edge bytes are the same order as the lineitem scan they derive
+      // from, so the source's on-disk bytes size the spread
+      val edges = SO.spreadEdges(bothWays(coPurchaseEdges(s, dir)), "u",
+        SO.pathBytes(s"$dir/lineitem.parquet"))
+      val deg = edges.groupBy("u").agg(count(lit(1)).as("outdeg"))
         .localCheckpoint(true)
       val nDf = broadcast(deg.agg(count(lit(1)).cast("double").as("nn")))
       // outdeg rides INSIDE the rank table so each iteration is one
       // edge⋈rank join + one destination rollup — not a second
       // rank⋈deg join per step
-      var rank = deg.crossJoin(nDf)
-        .select(col("p"), col("outdeg"), (lit(1.0) / col("nn")).as("r"))
-        .localCheckpoint(true)
-      for (_ <- 1 to 3) {
+      val rank0 = SO.stage(deg.crossJoin(nDf)
+        .select(col("u"), col("outdeg"), (lit(1.0) / col("nn")).as("r")))
+      val rank = SO.iterate(rank0, 3) { rank =>
         val contrib = edges
-          .join(rank.select(col("p"),
-            (col("r") / col("outdeg")).as("share")), "p")
-          .groupBy(col("q").as("p2"))
+          .join(rank.select(col("u"),
+            (col("r") / col("outdeg")).as("share")), "u")
+          .groupBy("v")
           .agg(sum("share").as("in_mass"))
-        rank = rank.select("p", "outdeg")
-          .join(contrib.withColumnRenamed("p2", "p"), Seq("p"), "left")
+        rank.select("u", "outdeg")
+          .join(contrib.withColumnRenamed("v", "u"), Seq("u"), "left")
           .crossJoin(nDf)
-          .select(col("p"), col("outdeg"),
+          .select(col("u"), col("outdeg"),
             ((lit(1.0) - d) / col("nn") +
               d * coalesce(col("in_mass"), lit(0.0))).as("r"))
-          .localCheckpoint(true)
       }
-      rank.select(col("p").as("part"), round(col("r") * 1000, 6).as("score"))
+      rank.select(col("u").as("part"), round(col("r") * 1000, 6).as("score"))
         .orderBy(col("score").desc, col("part"))
         .limit(20)
     },
@@ -875,14 +870,7 @@ object CoverageQueries {
     // oracle is the INDEPENDENT id-ordered a<b<c triple join — two
     // different enumeration orders must land on identical counts.
     "q138_triangle_count" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct()
-      val e = li.as("x").join(li.as("y"),
-          col("x.ok") === col("y.ok") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("u"), col("y.p").as("v"))
-        .distinct()
-        .localCheckpoint(true)
+      val e = coPurchaseEdges(s, dir).localCheckpoint(true)
       val deg = e.select(col("u").as("p"))
         .unionAll(e.select(col("v").as("p")))
         .groupBy("p").agg(count(lit(1)).as("dg"))
@@ -1608,42 +1596,26 @@ object CoverageQueries {
     // standard dense-community / spam-cluster extractor. Iterative
     // peel: drop sub-k nodes, recompute degrees, repeat to fixpoint —
     // each round is one degree groupBy + two semi-join prunes on a
-    // SHRINKING edge table (lineage cut per round, the
-    // connectedComponents discipline), O(peel-depth) rounds with a
-    // loud non-convergence failure. The per-round count() actions are
-    // bounded scalars (the watermark precedent), never row data. The
+    // SHRINKING edge table (staged per round by SO.iterate),
+    // O(peel-depth) rounds with a loud non-convergence failure. The
+    // per-round edge count is the fixpoint test — a bounded scalar,
+    // never row data. The
     // oracle replays the same peel as 30 generated CTE rounds —
     // idempotent past the fixpoint, so depth differences can't
     // desynchronize the engines.
     "q168_kcore" -> { (s, dir) =>
       val k = 3
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct()
-      var edges = li.alias("a").join(li.alias("b"),
-          col("a.ok") === col("b.ok") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-        .localCheckpoint()
-      var nEdges = edges.count()
-      var converged = false
-      var iters = 0
-      while (!converged && iters < 30) {
+      val edges = SO.iterate(SO.stage(coPurchaseEdges(s, dir)), 30,
+          fixpoint = Some(_.count()), name = "q168: 3-core peel") { edges =>
         val deg = edges.select(col("u").as("x"))
           .unionAll(edges.select(col("v").as("x")))
           .groupBy("x").agg(count(lit(1)).as("d"))
         val keep = deg.filter(col("d") >= k).select("x")
-        val pruned = edges
+        edges
           .join(keep.withColumnRenamed("x", "u"), Seq("u"))
           .join(keep.withColumnRenamed("x", "v"), Seq("v"))
-          .select("u", "v").localCheckpoint()
-        val nAfter = pruned.count()
-        if (nAfter == nEdges) converged = true
-        else { edges = pruned; nEdges = nAfter }
-        iters += 1
+          .select("u", "v")
       }
-      require(converged,
-        s"q168: 3-core peel did not converge within 30 rounds " +
-          s"($nEdges edges at round $iters)")
       val coreDeg = edges.select(col("u").as("part"))
         .unionAll(edges.select(col("v").as("part")))
         .groupBy("part").agg(count(lit(1)).as("core_degree"))
@@ -1934,50 +1906,31 @@ object CoverageQueries {
     // connected, this says HOW FAR): layered frontier expansion from
     // the min-id part over the co-purchase graph, distances as a
     // TABLE at every round (per-node state never visits the driver —
-    // the q134 rule), merged by min(dist), checkpointed per round
-    // with an exceptAll fixpoint probe (count stability alone can't
-    // see a distance improving) and a loud non-convergence failure.
+    // the q134 rule), merged by min(dist), staged per round with a
+    // (count, Σdist) fixpoint probe — nodes are only ever added and
+    // distances only ever lowered, so an unchanged pair ⇔ an unchanged
+    // table — and a loud non-convergence failure.
     // Unreachable nodes are reported explicitly (dist = -1), not
     // dropped. The oracle replays BFS as a recursive CTE over (node,
     // dist) pairs — UNION dedup keeps it polynomial, the same ≤15
     // cap, min(dist) outside.
     "q178_sssp" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct()
-      // size-gated width before the checkpoint (q134's r15 device —
-      // ScaleOps.edgeWidth from the source scan's bytes): BFS reads
-      // this edge table up to 15 rounds, and an AQE-coalesced
-      // checkpoint would feed every round a near-serial edge side;
-      // the r14 full-session-width spread was a measured net cost at
-      // gate scale, so the width tracks edge volume instead
-      val wE = SO.edgeWidth(s, SO.pathBytes(s"$dir/lineitem.parquet"))
-      val edges0 = li.alias("a").join(li.alias("b"),
-          col("a.ok") === col("b.ok") && col("a.p") =!= col("b.p"))
-        .select(col("a.p").as("u"), col("b.p").as("v")).distinct()
-      val edges = (if (wE <= 1) edges0
-        else edges0.repartition(wE, col("u"))
-          .sortWithinPartitions("u")) // q134's note: compression + runs
-        .localCheckpoint()
+      // BFS reads this edge table up to 15 rounds
+      val edges = SO.spreadEdges(bothWays(coPurchaseEdges(s, dir)), "u",
+        SO.pathBytes(s"$dir/lineitem.parquet"))
       val nodes = edges.select(col("u").as("node")).distinct()
         .localCheckpoint()
       val src = nodes.agg(min("node")).head().getLong(0) // 1-row scalar
-      var dist = nodes.filter(col("node") === src)
-        .select(col("node"), lit(0).as("dist")).localCheckpoint()
-      var converged = false
-      var round = 0
-      while (!converged && round < 15) {
+      val dist = SO.iterate(
+          SO.stage(nodes.filter(col("node") === src)
+            .select(col("node"), lit(0).as("dist"))), 15,
+          fixpoint = Some(_.agg(count(lit(1)), sum("dist")).head()),
+          name = "q178: BFS") { dist =>
         val next = dist.join(edges, col("node") === col("u"))
           .select(col("v").as("node"), (col("dist") + 1).as("dist"))
-        val merged = dist.unionByName(next)
+        dist.unionByName(next)
           .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
-        converged = merged.exceptAll(dist).isEmpty
-        dist = merged
-        round += 1
       }
-      require(converged,
-        s"q178: BFS did not reach a fixpoint within 15 rounds")
       val unreached = nodes.join(dist, Seq("node"), "left_anti")
         .agg(count(lit(1)).as("n_nodes"))
         .select(lit(-1).as("dist"), col("n_nodes"))
@@ -2090,15 +2043,9 @@ object CoverageQueries {
     "q184_negative_sampling" -> { (s, dir) =>
       val draws = 4
       val keep = 2
-      // SO.stage: lineage cut; DISK_ONLY under the single-JVM sf10
-      // probe flag (SPARK_GRAFT_DISK_STAGE) where this table thrashed
-      // the MemoryStore in round 8
-      val pos = SO.stage(t(s, dir, "orders")
-        .select(col("o_custkey").as("u"), col("o_orderkey"))
-        .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o_orderkey"),
-            col("l_partkey").as("p")), Seq("o_orderkey"))
-        .select("u", "p").distinct())
+      // SO.stage: lineage cut; DISK_ONLY under spark.graft.stage.diskOnly,
+      // for single-JVM sf10 runs where this table thrashed the MemoryStore
+      val pos = SO.stage(cfPositives(s, dir))
       val nParts = broadcast(t(s, dir, "part")
         .agg(max("p_partkey").as("np")))
       val cands = pos.crossJoin(nParts)
@@ -2233,12 +2180,7 @@ object CoverageQueries {
     // nothing graph-scale is ever shuffled by walk.
     "q188_random_walks" -> { (s, dir) =>
       val walkLen = 4
-      val edges = t(s, dir, "orders")
-        .select(col("o_custkey").as("u"), col("o_orderkey"))
-        .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o_orderkey"),
-            col("l_partkey").as("p")), Seq("o_orderkey"))
-        .select("u", "p").distinct()
+      val edges = cfPositives(s, dir)
         .localCheckpoint() // reused by all walkLen steps
       def h(step: Int) = conv(substring(md5(concat_ws(":", lit("walk"),
         col("walk"), lit(step), col("cand"))), 1, 15), 16, 10).cast("long")
@@ -2276,46 +2218,27 @@ object CoverageQueries {
     // total tie order (neighbor-label count desc, then smallest
     // label). Each round is one edges⋈labels join + one (node, label)
     // count + one per-node top-1 — all shuffles keyed by node, state
-    // is |nodes| rows checkpointed per round (the q178 BFS discipline),
-    // so 100 TB of edges costs 5 edge-scans, never an edge² blowup.
+    // is |nodes| rows staged per round (SO.iterate), so 100 TB of
+    // edges costs 5 edge-scans, never an edge² blowup.
     "q190_lpa_communities" -> { (s, dir) =>
       val rounds = 5
-      val items = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = items.as("x").join(items.as("y"),
-        col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("a"), col("y.p").as("b")).distinct()
-      // size-gated spread before the checkpoint (q134's r15 device):
-      // AQE coalesces the union's tiny exchange to ~1 partition and
-      // the checkpoint freezes it, near-serializing all 5 rounds'
-      // edge side — but the r14 full-session-width spread was itself
-      // a driver-measured net cost at sf0.1 (6.62 → 7.77 s), so the
-      // width tracks edge volume (ScaleOps.edgeWidth over the source
-      // scan's bytes; 1 = keep the coalesced shape)
-      val wE = SO.edgeWidth(s, SO.pathBytes(s"$dir/lineitem.parquet"))
-      val und0 =
-        e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-      val und = SO.stage( // reused by all rounds; DISK_ONLY under the
-        // single-JVM probe flag (see ScaleOps.stage)
-        if (wE <= 1) und0
-        else und0.repartition(wE, col("b"))
-          .sortWithinPartitions("b")) // sorted blocks: smaller
-          // exchanges + pre-sorted SMJ runs every round (q134's note)
-      var labels = und.select(col("a").as("node")).distinct()
+      // (u, v) both ways, spread by v: each round joins labels on v
+      val und = SO.spreadEdges(bothWays(coPurchaseEdges(s, dir)), "v",
+        SO.pathBytes(s"$dir/lineitem.parquet"))
+      val labels0 = und.select(col("u").as("node")).distinct()
         .withColumn("lbl", col("node"))
-      for (_ <- 1 to rounds) {
-        val cnt = und.join(labels, und("b") === labels("node"))
-          .select(col("a").as("node"), col("lbl"))
+      val labels = SO.iterate(labels0, rounds) { labels =>
+        val cnt = und.join(labels, und("v") === labels("node"))
+          .select(col("u").as("node"), col("lbl"))
           .groupBy("node", "lbl").agg(count(lit(1)).as("c"))
         // (count desc, label asc) argmax as a hash aggregate —
         // max(struct(c, -lbl)) — instead of a sort + row_number
         // window: drops one full sort of the (node, label) table per
         // round (sf1 5-round run ~25 s vs ~30 s same-day for the
         // window form; sf0.1 within noise)
-        labels = SO.stage(cnt.groupBy("node") // bound lineage per round
+        cnt.groupBy("node")
           .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("node"), (-col("m.nl")).as("lbl")))
+          .select(col("node"), (-col("m.nl")).as("lbl"))
       }
       labels.select(col("node"), col("lbl").as("community"))
         .orderBy("node")
@@ -2990,69 +2913,8 @@ object CoverageQueries {
     // only SAMPLED pairs reach the exchange — the explode→filter
     // pipeline never materializes the unsampled stream.
     "q214_item_item_cf_dimsum" -> { (s, dir) =>
-      val gamma = 8.0
-      val M = 1L << 20
-      val pos = t(s, dir, "orders")
-        .select(col("o_custkey").as("u"), col("o_orderkey"))
-        .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o_orderkey"),
-            col("l_partkey").as("p")), Seq("o_orderkey"))
-        .select("u", "p").distinct()
-        .localCheckpoint()
-      val nu = pos.groupBy("p").agg(count(lit(1)).as("n"))
-      val sampled = pos.join(nu, "p")
-        .groupBy("u")
-        .agg(sort_array(collect_list(struct(col("p"), col("n"))))
-          .as("sp"))
-        .select(col("u"), explode(expr(
-          """flatten(transform(sp, (a, i) ->
-            |  transform(slice(sp, i + 2, size(sp)), b ->
-            |    named_struct('p1', a.p, 'n1', a.n,
-            |                 'p2', b.p, 'n2', b.n))))""".stripMargin))
-          .as("pr"))
-        .select(col("u"), col("pr.p1").as("p1"), col("pr.n1").as("n1"),
-          col("pr.p2").as("p2"), col("pr.n2").as("n2"))
-        .withColumn("pq", round(least(lit(1.0),
-          lit(gamma) / sqrt(col("n1") * col("n2"))) * M).cast("long"))
-        // pq == 2^20 ⇔ p = 1 ⇔ the 40-bit draw always passes — the
-        // leading disjunct short-circuits codegen past the md5 for
-        // every exact-regime pair (the common case off the whale
-        // tail; measured ~12 → ~7 s at sf0.1), with IDENTICAL
-        // semantics, so the oracle replays the unconditional form
-        .filter(col("pq") >= M ||
-          conv(substring(md5(concat_ws(":", lit("ds"), col("u"),
-            col("p1"), col("p2"))), 1, 10), 16, 10).cast("long") <
-            col("pq") * M)
-      val sim = sampled
-        // (r15 probe, rejected: an explicit (p1,p2) repartition before
-        // this groupBy — post-shuffle double aggregation instead of
-        // the combine-factor-1 map-side partial — measured WORSE here
-        // and on every ItemItemCf arm; see pairCounts's finding note)
-        .groupBy("p1", "p2", "n1", "n2", "pq")
-        .agg(count(lit(1)).as("c"))
-        .select(col("p1"), col("p2"),
-          round(col("c") * M.toDouble / col("pq") /
-            sqrt(col("n1") * col("n2")), 6).as("cosine_est"))
-      // symmetrize by EXPLODING both orientations from one pass, not
-      // a self-union (ItemItemCf.rankTopK's r15 device): the union
-      // planned the sampled-pair subtree twice — AQE reused the
-      // exchange but each branch re-ran the post-exchange aggregate —
-      // and the r14 staging probe (10.4 s staged vs 9.6 lazy) showed
-      // materializing blocks is the wrong fix at this row count
-      val both = sim.select(explode(array(
-          struct(col("p1").as("a"), col("p2").as("b"),
-            col("cosine_est").as("cosine_est")),
-          struct(col("p2").as("a"), col("p1").as("b"),
-            col("cosine_est").as("cosine_est")))).as("e"))
-        .select(col("e.a").as("p1"), col("e.b").as("p2"),
-          col("e.cosine_est").as("cosine_est"))
-      val w = Window.partitionBy("p1")
-        .orderBy(col("cosine_est").desc, col("p2"))
-      both.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("p1").as("part"), col("rank"),
-          col("p2").as("similar"), col("cosine_est"))
-        .orderBy("part", "rank")
+      graft.operators.ItemItemCf.dimsum(cfPositives(s, dir), gamma = 8.0)
+        .withColumnRenamed("cosine", "cosine_est")
     },
 
     // Multi-step catalog mutation under the driver gate (round-9
@@ -3231,12 +3093,7 @@ object CoverageQueries {
     // ranking on bipartite co-purchase graphs; more rounds are the
     // same joins.
     "q219_hits" -> { (s, dir) =>
-      val e = t(s, dir, "orders")
-        .select(col("o_custkey").as("u"), col("o_orderkey"))
-        .join(t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o_orderkey"),
-            col("l_partkey").as("p")), Seq("o_orderkey"))
-        .select("u", "p").distinct()
+      val e = cfPositives(s, dir)
         .localCheckpoint() // four iteration joins reuse it
       val h1 = e.groupBy("u").agg(count(lit(1)).as("h1"))
       val a1 = e.join(h1, "u").groupBy("p").agg(sum("h1").as("a1"))
@@ -3452,7 +3309,7 @@ object CoverageQueries {
     // composed contract, like each parent.
     "q227_item_item_cf_capped_dimsum" -> { (s, dir) =>
       graft.operators.ItemItemCf
-        .cappedDimsum(cfPositives(s, dir), cap = 8, gamma = 8.0)
+        .dimsum(cfPositives(s, dir), gamma = 8.0, cap = Some(8))
         .withColumnRenamed("cosine", "cosine_est")
     },
 
@@ -3509,8 +3366,8 @@ object CoverageQueries {
         .unionByName(nij.select(col("j").as("i"), col("i").as("j"),
           col("n")))
         .localCheckpoint()
-      var strength = items.select(col("ty"), lit(1000000L).as("st"))
-      for (_ <- 1 to rounds) {
+      val strength0 = items.select(col("ty"), lit(1000000L).as("st"))
+      val strength = SO.iterate(strength0, rounds) { strength => // ≤T rows
         val denom = directed
           .join(strength.select(col("ty").as("i"), col("st").as("si")),
             "i")
@@ -3519,9 +3376,8 @@ object CoverageQueries {
           .select(col("i").as("ty"),
             expr(s"(n * ${SC}L) div (si + sj)").as("term"))
           .groupBy("ty").agg(sum("term").as("dn"))
-        strength = items.join(denom, "ty")
+        items.join(denom, "ty")
           .select(col("ty"), expr(s"(w * ${SC}L) div dn").as("st"))
-          .localCheckpoint() // ≤T rows per round
       }
       strength.join(items, "ty")
         .withColumn("rank", row_number().over(

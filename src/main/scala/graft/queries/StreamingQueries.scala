@@ -67,18 +67,14 @@ object StreamingQueries {
       }
     }.sum
     // malformed overrides degrade LOUDLY to the default instead of
-    // throwing NumberFormatException from inside every streaming gate
-    // (r14 advice): the message names the knob so a typo'd sitting is
-    // diagnosable from stderr
+    // throwing NumberFormatException from inside every streaming gate:
+    // the message names the knob so a typo is diagnosable from stderr
     val per = s.conf.getOption("spark.graft.stream.bytesPerStatePartition")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES"))
       .flatMap { v =>
         val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
         if (parsed.isEmpty) System.err.println(
-          "[graft] ignoring malformed " +
-            "spark.graft.stream.bytesPerStatePartition / " +
-            s"SPARK_GRAFT_STREAM_STATE_PARTITION_BYTES value '$v' — " +
-            "using the 8 MiB default")
+          "[graft] ignoring malformed spark.graft.stream.bytesPerStatePartition " +
+            s"value '$v' — using the 8 MiB default")
         parsed
       }.getOrElse(8L << 20)
     val cur = s.conf.get("spark.sql.shuffle.partitions", "32").toInt

@@ -887,6 +887,8 @@ class PartitionedCowTable(val root: String, val partCol: String,
     * (updateWhere, deleteWhere, mergeSync) pass neither flag and
     * still never rebase: any concurrent change could invalidate what
     * they computed.
+    *
+    * Returns the version this commit published.
     */
   private def commit(data0: DataFrame, touchedIn: Option[Set[String]],
                      carried: Seq[Entry],
@@ -894,7 +896,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
                      narrowRead: Boolean = false,
                      keyProbe: Option[(Seq[Entry], String) => Boolean] =
                        None)
-      : Unit = {
+      : Int = {
     val spec = currentPartCol
     val base0 = currentVersion
     // conform to the committed schema unless this commit SETS the
@@ -1349,6 +1351,7 @@ class PartitionedCowTable(val root: String, val partCol: String,
       }
       committed = publishAttempt(wdir)
     }
+    base.map(_ + 1).getOrElse(0)
   }
 
   private def writeVersion(v: Int, schemaDdl: String, spec: String,
@@ -1835,7 +1838,10 @@ class PartitionedCowTable(val root: String, val partCol: String,
   private def mergeSyncImpl(source0: DataFrame, keys: Seq[String],
                             scope: Option[Set[String]])
       : (Long, Long, Long) = {
-    if (!exists) { overwrite(source0); return (source0.count(), 0L, 0L) }
+    if (!exists) { // count what was written, not a second source pass
+      val v = commit(source0, None, Seq.empty, resetSchema = true)
+      return (readVersion(v).count(), 0L, 0L)
+    }
     val source = conformInput(source0)
     val cols = read().columns.sorted.toSeq
     // 64-bit row hash: at billions of changed keys a 32-bit hash

@@ -67,7 +67,7 @@ class ItemItemCfSpec extends SparkSpec {
       exactBudget = 100L, cappedBudget = 100L)
     assert(a3.select("regime").distinct().as[String].head()
       === "capped_dimsum")
-    assert(rows(a3) === rows(ItemItemCf.cappedDimsum(pos, cap = 8)))
+    assert(rows(a3) === rows(ItemItemCf.dimsum(pos, cap = Some(8))))
     // decision columns ride every row
     assert(a3.select("pair_rows_exact").distinct().as[Long].head()
       === exactPairs)

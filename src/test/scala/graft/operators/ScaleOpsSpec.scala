@@ -131,6 +131,25 @@ class ScaleOpsSpec extends SparkSpec {
       s"${edgeCopies.size} staged edge copies still persisted")
   }
 
+  test("connectedComponents keeps at most the final label round " +
+    "persisted") {
+    // chains of five ids: 200 vertices, diameter 4, so the iterative
+    // path stages the initial labels plus one label table per round
+    val edges = (1L to 200L).filter(_ % 5 != 0).map(i => (i, i + 1))
+      .toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val reps = ScaleOps.connectedComponents(edges, localEdgeThreshold = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(reps.size == 200 && reps.forall { case (v, r) => r == (v - 1) / 5 * 5 + 1 })
+    // persisted RDDs are held weakly, so one the cleaner already took
+    // is simply absent; a label round is one holding every vertex
+    val labelRounds = sc.getPersistentRDDs.toSeq
+      .filter { case (id, rdd) => !before.contains(id) && rdd.count() == 200L }
+    assert(labelRounds.size <= 1,
+      s"${labelRounds.size} label rounds still persisted")
+  }
+
   test("stage() honors the disk-only flag without changing results") {
     val df = spark.range(0, 1000).toDF("id")
     // default path: plain localCheckpoint, results intact

@@ -1483,6 +1483,24 @@ class PartitionedCowTableSpec extends SparkSpec {
     assert(t.read().filter($"month" === "2020-03").isEmpty)
   }
 
+  test("mergeSync on a missing table evaluates its source once and " +
+    "reports every source row as inserted") {
+    implicit val s = spark
+    val tally = udf(EvalProbe.tally).asNondeterministic()
+    // the filter reads the tallied pid, so even a bare count() of the
+    // source evaluates it
+    val src = spark.range(1, 4).select(tally($"id").as("pid"))
+      .filter($"pid" > 0L)
+      .select($"pid", lit("2020-01").as("month"), lit("n").as("v"),
+        lit(true).as("flag"))
+    val fresh = PartitionedCowTable(
+      Files.createTempDirectory("pcow_sync_once").toString + "/t", "month")
+    EvalProbe.calls.set(0)
+    assert(fresh.mergeSync(src, Seq("pid")) === ((3L, 0L, 0L)))
+    assert(EvalProbe.calls.get() == 3)
+    assert(fresh.read().count() == 3)
+  }
+
   test("commit copies are freed: no persisted RDD outlives a commit, " +
     "whether it succeeds or is rejected") {
     val sc = spark.sparkContext
