@@ -1,4 +1,5 @@
 package graft
+
 object Bench {
   /** What to publish for one query given its suite (median, min) and
     * steady-state reference → (published median, published min,
